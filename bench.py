@@ -134,7 +134,9 @@ only the last 2000 chars; r2-r4 artifacts were ``parsed: null`` from
 head-clipped oversized lines) — full evidence always lands in the
 committed ``BENCH_DETAIL_r{N}.json`` side file.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the CPUs this
+process may run on; the scaling levels are lo = max(1, min(4, CPUS // 4))
+and hi = 4 * lo, and no efficiency is reported when hi > CPUS),
 BENCH_CONVS (default 100000 ≈ 0.62M turns incl. the mega tail — short
 runs × more of them beats long runs × few on this noise profile, and
 the bench MUST finish inside the driver's ~10-min kill even with
@@ -144,7 +146,7 @@ BENCH_RUNS (timed runs per level, default 3 — same at both levels,
 steal-contaminated levels top up with ≤2 extra runs),
 BENCH_QUERY_RUNS (default 3; the first 2 rounds are guaranteed, the
 3rd runs only when the measured round time projects inside budget),
-BENCH_LO_CORES / BENCH_HI_CORES (default 4 / 16), BENCH_RETRY=0 to
+BENCH_RETRY=0 to
 disable the bounded retry, BENCH_COVERAGE=0 to skip the coverage tier
 (BENCH_COVERAGE_SF_DIR, default /root/testdata/sf0.01),
 BENCH_BUDGET_S (wall-clock budget guard, default 500 — the driver
@@ -164,12 +166,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_CONVS = int(os.environ.get("BENCH_CONVS", "100000"))
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 QUERY_RUNS = int(os.environ.get("BENCH_QUERY_RUNS", "3"))
-LO_CORES = int(os.environ.get("BENCH_LO_CORES", "4"))
-HI_CORES = min(int(os.environ.get("BENCH_HI_CORES", "16")), CPUS)
+# N and 4N come from the host: 4→16 on a 32-CPU host, 1→4 on a 4-CPU one.
+LO_CORES = max(1, min(4, CPUS // 4))
+HI_CORES = 4 * LO_CORES
 BUDGET_S = float(os.environ.get("BENCH_BUDGET_S", "500"))
 SEED = 42
 MEGA, MEGA_TURNS = 3, 50000  # forced skew: salting must earn its keep
@@ -997,7 +1000,13 @@ def main() -> int:
         return 0
 
     # ---- parts 1-2: corpus → skew → scaling attempts -----------------
-    if os.environ.get("BENCH_SCALING", "1") != "0":
+    if os.environ.get("BENCH_SCALING", "1") != "0" and HI_CORES > CPUS:
+        # never time a level against itself or oversubscribe the host
+        warnings.append(
+            f"scaling skipped: hi level local[{HI_CORES}] needs more than "
+            f"the {CPUS} CPUs available; no efficiency reported"
+        )
+    elif os.environ.get("BENCH_SCALING", "1") != "0":
         rows = _ensure_corpus()
         phases["corpus"] = round(_elapsed(), 1)
 

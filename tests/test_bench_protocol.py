@@ -11,7 +11,17 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
+import pytest
+
 import bench
+
+
+@pytest.fixture(autouse=True)
+def _pin_levels(monkeypatch):
+    # The levels are derived from the host at import; the expected
+    # values below are written for the recorded 4→16 pair.
+    monkeypatch.setattr(bench, "LO_CORES", 4)
+    monkeypatch.setattr(bench, "HI_CORES", 16)
 
 
 def _level(runs_sec, steal_pct, cores):
