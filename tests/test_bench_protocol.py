@@ -1,9 +1,7 @@
-"""Unit tests for bench.py's scaling-evidence protocol helpers — the
-pure arithmetic the judge-facing artifact depends on (steal-clean run
-selection, pooled-median efficiency, never-max selection). No Spark.
+"""Unit tests for bench.py's protocol helpers — the pure arithmetic
+its one-line artifact depends on (window validity, the A-B-A schedule,
+the line budget, regression flags). No Spark.
 """
-
-from __future__ import annotations
 
 import json
 import os
@@ -18,64 +16,9 @@ import bench
 
 @pytest.fixture(autouse=True)
 def _pin_levels(monkeypatch):
-    # The levels are derived from the host at import; the expected
-    # values below are written for the recorded 4→16 pair.
+    # expected values below are for the recorded 4→16 pair, not the host's
     monkeypatch.setattr(bench, "LO_CORES", 4)
     monkeypatch.setattr(bench, "HI_CORES", 16)
-
-
-def _level(runs_sec, steal_pct, cores):
-    import statistics
-
-    clean = [t for t, s in zip(runs_sec, steal_pct) if s <= bench.STEAL_CLEAN_PCT]
-    basis = clean if len(clean) >= bench.MIN_CLEAN_RUNS else list(runs_sec)
-    med = statistics.median(basis)
-    return {
-        "sec": round(med, 3),
-        "all_runs_sec": list(runs_sec),
-        "run_steal_pct": list(steal_pct),
-        "clean_runs": len(clean),
-        "steal_contaminated": len(clean) < bench.MIN_CLEAN_RUNS,
-        "turns_per_sec": round(1000.0 / med, 1),
-        "cores": cores,
-    }
-
-
-def _attempt(lo_runs, lo_steal, hi_runs, hi_steal):
-    return {
-        f"local{bench.LO_CORES}": _level(lo_runs, lo_steal, bench.LO_CORES),
-        f"local{bench.HI_CORES}": _level(hi_runs, hi_steal, bench.HI_CORES),
-    }
-
-
-def test_pooled_efficiency_uses_only_steal_clean_runs():
-    # lo has one contaminated run that is SLOWER; if it leaked into the
-    # pool it would inflate lo_median and therefore the efficiency.
-    a = _attempt([20.0, 20.0, 40.0], [1.0, 2.0, 20.0],
-                 [5.0, 5.0, 5.0], [0.0, 0.0, 0.0])
-    out = bench._pooled_efficiency([a], rows=1000)
-    assert out["lo_median_sec"] == 20.0  # 40s run excluded
-    assert out["efficiency"] == round((20.0 / 5.0) / 4, 3)
-    assert out["n_clean_runs_pooled"] == {"lo": 2, "hi": 3}
-
-
-def test_pooled_efficiency_is_median_not_max_across_attempts():
-    # two attempts with different efficiencies: the pool must combine
-    # their runs (median), never pick the better attempt.
-    a1 = _attempt([20.0, 20.0, 20.0], [0, 0, 0], [6.0, 6.0, 6.0], [0, 0, 0])
-    a2 = _attempt([24.0, 24.0, 24.0], [0, 0, 0], [5.0, 5.0, 5.0], [0, 0, 0])
-    out = bench._pooled_efficiency([a1, a2], rows=1000)
-    assert out["lo_median_sec"] == 22.0  # median of pooled [20x3, 24x3]
-    assert out["hi_median_sec"] == 5.5
-    e1 = (20.0 / 6.0) / 4
-    e2 = (24.0 / 5.0) / 4
-    assert min(e1, e2) < out["efficiency"] < max(e1, e2)
-
-
-def test_pooled_efficiency_falls_back_to_all_runs_when_nothing_clean():
-    a = _attempt([20.0, 22.0, 21.0], [9, 9, 9], [5.0, 5.0, 5.0], [0, 0, 0])
-    out = bench._pooled_efficiency([a], rows=1000)
-    assert out["lo_median_sec"] == 21.0  # all-runs fallback
 
 
 def test_sane_hw_band_brackets_observed_probe_noise():
@@ -107,81 +50,7 @@ def test_prev_round_loader_handles_missing_artifacts(tmp_path, monkeypatch):
     assert bench._load_prev_queries() == ("", {})
 
 
-# ---- time-matched normalization (round 4) ---------------------------
-
-def _level_hw(runs_sec, steal_pct, hw, cores):
-    lv = _level(runs_sec, steal_pct, cores)
-    lv["run_hw_rows_per_sec"] = list(hw)
-    return lv
-
-
-def _attempt_hw(lo, hi):
-    return {f"local{bench.LO_CORES}": lo, f"local{bench.HI_CORES}": hi}
-
-
-def test_time_matched_cancels_monotone_drift():
-    # A machine whose per-core speed decays 20% while the lo level
-    # runs (the measured r4 signature): raw efficiency is deflated,
-    # but dividing each run by its concurrent machine rate recovers
-    # the true engine efficiency exactly.
-    rows = 1000
-    true_eff = 0.9
-    # machine capability (relative): lo window 1.0 -> 0.8, hi steady 0.8
-    lo_caps = [1.0, 0.9, 0.8]
-    hi_caps = [0.8, 0.8, 0.8]
-    # engine rate scales with capability: lo_rate = k*cap, hi_rate =
-    # 4*true_eff*k*cap (same k). Use hw probe = 100*cap rows/s.
-    k = 50.0
-    lo_runs = [round(rows / (k * c), 3) for c in lo_caps]
-    hi_runs = [round(rows / (4 * true_eff * k * c), 3) for c in hi_caps]
-    lo = _level_hw(lo_runs, [0, 0, 0], [100 * c for c in lo_caps],
-                   bench.LO_CORES)
-    # the probe at the hi level runs at 4x the processes, so the
-    # machine's own 4x parallelism is inside the hi probe reading
-    hi4 = _level_hw(hi_runs, [0, 0, 0], [400 * c for c in hi_caps],
-                    bench.HI_CORES)
-    out = bench._pooled_tm([_attempt_hw(lo, hi4)], rows)
-    assert abs(out["efficiency_time_matched"] - true_eff) < 0.005
-    # and the raw pooled efficiency IS deflated by the drift
-    raw = bench._pooled_efficiency([_attempt_hw(lo, hi4)], rows)
-    assert raw["efficiency"] < true_eff - 0.02
-
-
-def test_time_matched_matches_raw_over_hw_in_quiet_window():
-    rows = 1000
-    lo = _level_hw([20.0, 20.0, 20.0], [0, 0, 0], [100, 100, 100],
-                   bench.LO_CORES)
-    hi = _level_hw([6.0, 6.0, 6.0], [0, 0, 0], [380, 380, 380],
-                   bench.HI_CORES)
-    out = bench._pooled_tm([_attempt_hw(lo, hi)], rows)
-    raw = bench._pooled_efficiency([_attempt_hw(lo, hi)], rows)
-    hw_eff = (380 / 100) / 4
-    assert abs(out["efficiency_time_matched"]
-               - raw["efficiency"] / hw_eff) < 0.005
-
-
-def test_collapsed_probe_voids_tm_validity():
-    lo_ok = _level_hw([20.0, 20.0], [0, 0], [100, 100], bench.LO_CORES)
-    lo_bad = _level_hw([20.0, 20.0], [0, 0], [100, 40], bench.LO_CORES)
-    assert bench._probes_consistent(lo_ok)
-    assert not bench._probes_consistent(lo_bad)  # 40 < 0.55*100
-
-
-def test_tm_norm_rates_filters_steal_like_raw_pool():
-    rows = 1000
-    lv = _level_hw([20.0, 20.0, 40.0], [0, 0, 20.0], [100, 100, 100],
-                   bench.LO_CORES)
-    rates = bench._tm_norm_rates(lv, rows)
-    assert len(rates) == 2  # contaminated run excluded
-    assert all(abs(r - (1000 / 20.0) / 100) < 1e-9 for r in rates)
-
-
-def test_tm_absent_on_pre_r4_attempt_shape():
-    a = _attempt([20.0, 20.0], [0, 0], [5.0, 5.0], [0, 0])
-    assert bench._pooled_tm([a], 1000) is None
-
-
-# ---- final-line budget (round 5: driver tail capture is 2000 chars) --
+# ---- final-line budget -----------------------------------------------
 
 def _worst_case_compact():
     """A compact dict at least as large as any real round produces:
@@ -202,8 +71,6 @@ def _worst_case_compact():
             "scaling_efficiency": 0.865,
             "window_valid": False,
             "normalized_efficiency": None,
-            "scaling_efficiency_time_matched": 0.979,
-            "tm_valid": True,
             "lo_turns_per_sec": 31092.8,
             "hi_turns_per_sec": 107549.6,
             "skew": {
@@ -229,13 +96,10 @@ def _worst_case_compact():
             },
         },
         "warnings": [
-            "second scaling attempt skipped: budget projection (210s "
-            "elapsed + ~140s retry would starve the skew/headline "
-            "reserve)",
-            "no window-valid scaling attempt: headline pooled over all "
-            "attempts; treat as measurement failure, not an engine "
-            "number",
-            "coverage tier truncated at 12 queries: driver-kill guard",
+            "scaling window invalid: treat the efficiency as a "
+            "measurement failure, not an engine number",
+            "coverage tier truncated at 12 queries: headline reserve",
+            "headline rounds capped at 2: kill guard",
         ],
         "detail_file": "BENCH_DETAIL_r05.json",
     }
@@ -250,7 +114,7 @@ def test_fit_line_worst_case_fits_driver_tail_capture():
     assert parsed["metric"] == "headline_queries_total"
     assert parsed["value"] == 123.456
     assert parsed["extract"]["scaling_efficiency"] == 0.865
-    assert parsed["extract"]["tm_valid"] is True
+    assert parsed["extract"]["window_valid"] is False
     assert parsed["extract"]["skew"]["salt8_spread"] == 4.77
     assert parsed["detail_file"] == "BENCH_DETAIL_r05.json"
 
@@ -275,7 +139,7 @@ def test_fit_line_small_compact_untouched():
 
 
 def test_fit_line_real_r05_shape_keeps_most_queries():
-    # the REAL round shape (the actual HEADLINE list, one warning):
+    # the real shape (the actual HEADLINE list, one warning):
     # must fit the budget while keeping (nearly) all per-query medians
     # — shedding a few fastest entries is fine, losing the dict is not
     compact = _worst_case_compact()
@@ -288,7 +152,7 @@ def test_fit_line_real_r05_shape_keeps_most_queries():
     assert len(kept) >= len(bench.HEADLINE) - 6
 
 
-# ---- regression min-guard (round 5) ----------------------------------
+# ---- regression min-guard ---------------------------------------------
 
 def test_regression_needs_median_and_min():
     prev = {"q_noise": 2.6, "q_real": 1.0, "q_fine": 1.0}
@@ -296,7 +160,6 @@ def test_regression_needs_median_and_min():
     qmins = {"q_noise": 1.7, "q_real": 1.8, "q_fine": 1.0}
     out = bench._flag_regressions(qtimes, qmins, prev, "r04")
     # q_noise: median regressed 2.7x but min is FASTER -> not flagged
-    # (the exact r4 minhash_lsh_candidates false positive)
     assert "q_noise" not in out
     # q_real: both median (2x) and min (1.8x) regressed -> flagged
     assert out["q_real"] == {
@@ -306,7 +169,7 @@ def test_regression_needs_median_and_min():
 
 
 def test_prev_round_loader_falls_back_to_detail_file(tmp_path, monkeypatch):
-    # r4's driver line was tail-clipped (parsed null) but its committed
+    # the recorded line was tail-clipped (parsed null) but the committed
     # DETAIL side file has the medians — the loader must use them
     monkeypatch.setattr(bench, "REPO", str(tmp_path))
     (tmp_path / "BENCH_r04.json").write_text(json.dumps({"parsed": None}))
@@ -331,59 +194,11 @@ def test_prev_round_loader_prefers_queries_median_key(tmp_path, monkeypatch):
 # ------------------------------------------------- A-B-A level schedule
 
 
-def _arm(runs_sec, steal_pct, hw, cores, rows=1000.0):
-    import statistics
-
-    clean = [t for t, s in zip(runs_sec, steal_pct) if s <= bench.STEAL_CLEAN_PCT]
-    basis = clean if len(clean) >= bench.MIN_CLEAN_RUNS else list(runs_sec)
-    med = statistics.median(basis)
-    return {
-        "sec": round(med, 3),
-        "best_sec": round(min(runs_sec), 3),
-        "all_runs_sec": list(runs_sec),
-        "run_steal_pct": list(steal_pct),
-        "run_hw_rows_per_sec": list(hw),
-        "clean_runs": len(clean),
-        "steal_contaminated": len(clean) < bench.MIN_CLEAN_RUNS,
-        "turns_per_sec": round(rows / med, 1),
-        "best_turns_per_sec": round(rows / min(runs_sec), 1),
-        "cores": cores,
-    }
-
-
-def test_merge_levels_recomputes_union_median_and_clean_flag():
-    # arm A: one clean + one steal-dirty run; arm B: one clean run.
-    a = _arm([10.0, 30.0], [0.5, 9.9], [100.0, 100.0], 4)
-    b = _arm([12.0], [0.4], [110.0], 4)
-    m = bench._merge_levels(a, b, rows=1000.0)
-    # union clean basis = [10.0, 12.0] -> median 11.0; dirty run kept
-    # in the lists but out of the basis
-    assert m["all_runs_sec"] == [10.0, 30.0, 12.0]
-    assert m["clean_runs"] == 2
-    assert m["steal_contaminated"] is False
-    assert m["sec"] == 11.0
-    assert m["turns_per_sec"] == round(1000.0 / 11.0, 1)
-    assert m["best_sec"] == 10.0
-    assert m["run_hw_rows_per_sec"] == [100, 100, 110]
-    assert m["cores"] == 4
-
-
-def test_merge_levels_contaminated_union_falls_back_to_all_runs():
-    a = _arm([10.0], [9.9], [100.0], 4)
-    b = _arm([20.0], [9.8], [100.0], 4)
-    m = bench._merge_levels(a, b, rows=1000.0)
-    assert m["steal_contaminated"] is True
-    assert m["sec"] == 15.0  # median over ALL runs when nothing clean
-
-
 def test_aba_schedule_cancels_linear_drift_where_sequential_does_not():
-    """Property: under a linear machine-RATE drift, the
-    mirror-symmetric lo×2 → hi×3 → lo×2 schedule's raw efficiency
-    (median over the merged lo runs vs median over hi runs) stays
-    within 0.5% of truth, while the sequential lo-block → hi-block
-    schedule is biased an order of magnitude further. Continuous-time
-    simulation: each run's duration solves ∫ rate(t) dt = work, so
-    later runs really are shorter AND shift every subsequent start."""
+    """Under a linear machine-RATE drift the mirror-symmetric lo×2 →
+    hi×3 → lo×2 schedule's raw efficiency stays within 0.5% of truth,
+    while the sequential schedule is biased ten times further. Each
+    simulated run's duration solves ∫ rate(t) dt = work."""
     import statistics
 
     work_lo, work_hi = 24.0, 7.5   # seconds of work at rate 1.0
@@ -414,39 +229,6 @@ def test_aba_schedule_cancels_linear_drift_where_sequential_does_not():
     assert err_seq > 10.0 * err_aba, (err_seq, err_aba)
 
 
-def _mkattempt_for_spread(lo_runs, lo_hw, hi_runs, hi_hw):
-    lo = _level_hw(lo_runs, [0.0] * len(lo_runs), lo_hw, bench.LO_CORES)
-    hi = _level_hw(hi_runs, [0.0] * len(hi_runs), hi_hw, bench.HI_CORES)
-    return lo, hi
-
-
-def test_spread_gate_forgives_probe_tracked_drift():
-    """A 25% cross-arm clock drift that the per-run probes track must
-    NOT void the window (the A-B-A mirror cancels it), but the same
-    timing spread WITHOUT probe corroboration — residual contamination
-    — still must. Exercises _scaling_attempt's normalized _clean via
-    the same arithmetic (kept in sync by the assertions on
-    MAX_RUN_SPREAD)."""
-    import statistics
-
-    def norm_spread(runs_sec, hw):
-        med_hw = statistics.median(hw)
-        normed = [t * (h / med_hw) for t, h in zip(runs_sec, hw)]
-        return statistics.median(normed) / min(normed)
-
-    # lo arms: 24 s at machine rate 100, then 16 s at rate 150
-    # (machine sped up 50%; work units 2400 == 2400 -> spread 1.0)
-    drift_tracked = norm_spread([24.0, 24.0, 16.0, 16.0],
-                                [100, 100, 150, 150])
-    assert drift_tracked <= bench.MAX_RUN_SPREAD
-    # an arm slowed 50% with NO probe corroboration: residual
-    # contamination, must still trip (median over 4 = mean of the
-    # middle two = 30 over min 24 = 1.25 > 1.2)
-    contaminated = norm_spread([24.0, 24.0, 36.0, 36.0],
-                               [100, 100, 100, 100])
-    assert contaminated > bench.MAX_RUN_SPREAD
-
-
 def test_coverage_cost_hints_merge_and_unknown_first(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "REPO", str(tmp_path))
     (tmp_path / "BENCH_DETAIL_r04.json").write_text(json.dumps(
@@ -464,41 +246,112 @@ def test_coverage_cost_hints_merge_and_unknown_first(tmp_path, monkeypatch):
 
 
 def test_scaling_attempt_aba_plumbing(monkeypatch):
-    """The A-B-A attempt must: call lo/hi/lo with the right runs and
-    min-clean args, merge the lo arms, and stamp the schedule."""
+    """The A-B-A attempt calls lo/hi/lo with 4 sub-mode arguments and
+    equal lo arms, merges the arms, and stamps the schedule."""
     calls = []
 
     def fake_subprocess(args):
         calls.append(args)
-        cores = int(args[2])
-        if cores == bench.LO_CORES:
-            n = int(args[4])
-            return _arm([20.0] * n, [0.0] * n, [100.0] * n, cores)
-        return _arm([5.5, 5.5, 5.5], [0.0] * 3, [400.0] * 3, cores)
+        cores, n = int(args[2]), int(args[4])
+        return bench._level([20.0 if cores == 4 else 5.5] * n, 1000, cores)
 
     monkeypatch.setattr(bench, "_subprocess_json", fake_subprocess)
     monkeypatch.setattr(
-        bench, "_hardware_ceiling",
-        lambda lo, hi: {"efficiency": 0.95, "lo_rows_per_sec": 100,
-                        "hi_rows_per_sec": 380},
+        bench, "_hardware_ceiling", lambda lo, hi: {"efficiency": 0.95}
     )
-    monkeypatch.setattr(bench, "_elapsed", lambda: 0.0)
-    monkeypatch.setenv("BENCH_HEADLINE", "0")  # scaling-only: arm=2
-    att = bench._scaling_attempt(runs=3, rows=1000, idx=1)
-    lo_calls = [c for c in calls if int(c[2]) == bench.LO_CORES]
-    assert [int(c[4]) for c in lo_calls] == [2, 2]   # mirror arms
-    assert int(lo_calls[0][6]) == 2  # arm A clean quota = min(2, arm)
-    assert int(lo_calls[1][6]) == 1  # arm B tops up what A left: 2-2
-    lo = att[f"local{bench.LO_CORES}"]
-    assert len(lo["all_runs_sec"]) == 4  # merged 2+2
-    assert "A-B-A" in att["schedule"]
-    assert att["window_valid"] is True
-    # eff = (1000/5.5) / (1000/20) / 4
-    assert abs(att["efficiency"] - (20.0 / 5.5) / 4) < 0.01
+    monkeypatch.setattr(bench, "_elapsed", lambda: 0.0)  # budget never binds
+    for headline, arm in (("0", 2), ("1", 1)):  # scaling-only vs full bench
+        monkeypatch.setenv("BENCH_HEADLINE", headline)
+        calls.clear()
+        att = bench._scaling_attempt(runs=3, rows=1000)
+        assert all(len(c) == 5 and c[0] == "--time-level" for c in calls)
+        assert [int(c[2]) for c in calls] == [4, 16, 4]
+        # the mirror arms have equal run counts by construction
+        assert int(calls[0][4]) == int(calls[2][4]) == arm
+        assert int(calls[1][4]) == 3
+        assert len(att["local4"]["all_runs_sec"]) == 2 * arm
+        assert "A-B-A" in att["schedule"]
+        assert att["window_valid"] is True
+        assert abs(att["efficiency"] - (20.0 / 5.5) / 4) < 0.01
 
-    monkeypatch.setenv("BENCH_HEADLINE", "1")  # full bench: arm=1
-    calls.clear()
-    bench._scaling_attempt(runs=3, rows=1000, idx=1)
-    lo_calls = [c for c in calls if int(c[2]) == bench.LO_CORES]
-    assert [int(c[4]) for c in lo_calls] == [1, 1]
-    assert int(lo_calls[0][6]) == 1
+
+@pytest.mark.parametrize("rnd, valid", [("04", False), ("05", True)])
+def test_window_replays_recorded_verdicts(rnd, valid):
+    """The recorded attempts replay to their recorded verdicts: r04 is
+    void only on its 0.738 bracket probe; both raw spreads are ≤ 1.12
+    and both efficiencies are plausible."""
+    path = os.path.join(os.path.dirname(bench.__file__), f"BENCH_DETAIL_r{rnd}.json")
+    with open(path) as f:
+        recorded = json.load(f)["extract"]
+    (a,) = recorded["attempts"]
+    w = bench._window(
+        a["local4"], a["local16"], a["hw_probe_before"], a["hw_probe_after"]
+    )
+    assert w["window_valid"] is valid is a["window_valid"]
+    assert w["hw_window_sane"] is valid
+    assert w["run_spread"] <= 1.12 and w["run_spread_sane"]
+    assert 0 < w["efficiency"] <= bench.MAX_EFF
+    assert abs(w["efficiency"] - a["efficiency"]) < 0.002
+    assert w["normalized_efficiency"] == recorded["normalized_efficiency"]
+
+
+@pytest.mark.parametrize("lo, rows, lo_rate, hi_rate, start_s, stops", [
+    # default full bench on a 4-vCPU VM: local[1] and (skew) local[4]
+    # turns/s, start = corpus + skew phases
+    (1, 149_657, 1710.7, 6657.4, 105.1, True),
+    # local[4]/local[16] on the 32-CPU host (BENCH_DETAIL_r05.json)
+    (4, 616_259, 31530.3, 102769.1, 41.0, False),
+])
+def test_full_bench_attempt_leaves_headline_inside_kill_guard(
+    monkeypatch, lo, rows, lo_rate, hi_rate, start_s, stops
+):
+    """A default full bench, simulated at the run rates measured on its
+    default corpus: the scaling attempt completes or stops after its
+    first lo arm, and either way the headline's two guaranteed rounds
+    still fit before the kill guard."""
+    clock = [start_s]
+
+    def fake_subprocess(args):
+        cores, n = int(args[2]), int(args[4])
+        run_s = rows / (lo_rate if cores == lo else hi_rate)
+        warm = 3 if cores >= 8 else 1  # as in _time_extract
+        clock[0] += 20.0 + (warm + n) * run_s  # JVM start, then the runs
+        return bench._level([run_s] * n, rows, cores)
+
+    def fake_probe(lo_cores, hi_cores):
+        clock[0] += 10.0
+        return {"efficiency": 0.9}
+
+    monkeypatch.setattr(bench, "LO_CORES", lo)
+    monkeypatch.setattr(bench, "HI_CORES", 4 * lo)
+    monkeypatch.setattr(bench, "_subprocess_json", fake_subprocess)
+    monkeypatch.setattr(bench, "_hardware_ceiling", fake_probe)
+    monkeypatch.setattr(bench, "_elapsed", lambda: clock[0])
+    monkeypatch.setenv("BENCH_HEADLINE", "1")
+    att = bench._scaling_attempt(runs=3, rows=rows)
+    assert ("abandoned" in att) is stops
+    assert clock[0] + bench.headline_reserve(2) <= bench.KILL_GUARD_S
+
+
+def test_hi_level_beyond_host_cpus_reports_no_efficiency(
+    tmp_path, monkeypatch, capsys
+):
+    """On a 2-CPU host (lo 1, hi 4) nothing is timed, not even the skew
+    evidence, and the line carries a null efficiency and a warning."""
+    def never(*args):
+        pytest.fail("the scaling part ran on a host it would oversubscribe")
+
+    monkeypatch.setattr(bench, "CPUS", 2)
+    monkeypatch.setattr(bench, "LO_CORES", 1)
+    monkeypatch.setattr(bench, "HI_CORES", 4)
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    monkeypatch.setattr(bench, "_ensure_corpus", never)
+    monkeypatch.setattr(bench, "_subprocess_json", never)
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    monkeypatch.delenv("BENCH_SCALING", raising=False)
+    monkeypatch.setenv("BENCH_HEADLINE", "0")
+    assert bench.main() == 0
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["extract"]["cores"] == {"lo": 1, "hi": 4}
+    assert line["extract"]["scaling_efficiency"] is None
+    assert any("local[4] needs more than the 2 CPUs" in w for w in line["warnings"])
